@@ -7,8 +7,6 @@ shuffles are the final aggregates.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -580,13 +578,11 @@ _BPE_SEP = "\x1f"
 _BPE_SEP2 = _BPE_SEP * 2
 _BPE_MERGES = 18  # vocab budget: max merge rounds (real trainers use ~32k)
 _BPE_MIN_PAIR = 2  # stop early when the best pair is unrepeated
-# Driver-collect row budget for the trainer's distinct-word table (round-15
-# guard; see _bpe_train). 10M short-word rows ≈ hundreds of MB of driver
-# heap — generous for any natural-language vocabulary, small enough to fail
+# Driver-collect row budget for the trainer's distinct-word table (see
+# _bpe_train). 10M short-word rows ≈ hundreds of MB of driver heap —
+# generous for any natural-language vocabulary, small enough to fail
 # loudly before the JVM does.
-_BPE_DRIVER_ROW_BUDGET = int(
-    os.environ.get("SPARK_GRAFT_BPE_DRIVER_ROWS", 10_000_000)
-)
+_BPE_DRIVER_ROW_BUDGET = 10_000_000
 # Merge-resolution history (each step measured before shipping): r14 build
 # measured the non-interacting batch rule (batch sizes collapse to 1 after
 # ~6 merges; rejected) and shipped in-plan chunked resolution (19 -> 7
@@ -737,17 +733,16 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
     Spark jobs); a corpus whose DISTINCT-WORD table outgrows the driver
     is the signal to revive the in-plan chunked trainer.
 
-    DRIVER-BUDGET GUARD (round-15, VERDICT r14 item 1 / ADVICE): the
-    Heaps'-law bound is an argument, not a proof — a pathological corpus
-    (URLs, hashes, code identifiers) can push the distinct-"word" table
-    to billions of rows and OOM the driver silently inside collect().
+    DRIVER-BUDGET GUARD: the Heaps'-law bound is an argument, not a
+    proof — a pathological corpus (URLs, hashes, code identifiers) can
+    push the distinct-"word" table to billions of rows and OOM the driver
+    silently inside collect().
     The word table is persisted, counted (one cheap action on the cached
     table — the corpus-sized job still runs exactly once), and the
-    collect only proceeds under ``_BPE_DRIVER_ROW_BUDGET`` rows
-    (env ``SPARK_GRAFT_BPE_DRIVER_ROWS``; default 10M ≈ several hundred
-    MB of driver heap for short words). Over budget, the trainer raises
-    a clear error pointing at the archived in-plan chunked trainer
-    (git history, round-14 build) instead of dying in the JVM. A
+    collect only proceeds under ``_BPE_DRIVER_ROW_BUDGET`` rows (10M ≈
+    several hundred MB of driver heap for short words). Over budget, the
+    trainer raises a clear error pointing at the archived in-plan chunked
+    trainer (git history) instead of dying in the JVM. A
     frequency-floor prune was considered and REJECTED as inexact: pair
     counts sum wc over words, so many wc=1 words can jointly host a
     winning pair — dropping them could change the learned merge list."""
@@ -757,10 +752,9 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
         if n_words > _BPE_DRIVER_ROW_BUDGET:
             raise ValueError(
                 f"BPE trainer: distinct-word table has {n_words} rows, over "
-                f"the driver collect budget ({_BPE_DRIVER_ROW_BUDGET}; env "
-                "SPARK_GRAFT_BPE_DRIVER_ROWS). Revive the in-plan chunked "
-                "merge trainer (round-14 build, git history) for corpora "
-                "whose vocabulary outgrows the driver."
+                f"the driver collect budget ({_BPE_DRIVER_ROW_BUDGET}). "
+                "Revive the in-plan chunked merge trainer (git history) "
+                "for corpora whose vocabulary outgrows the driver."
             )
         rows = words0.collect()  # vocabulary-bounded, now proven in-budget
     finally:

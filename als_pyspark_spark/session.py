@@ -1,7 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Defaults are chosen for the local[32]/128GiB test box but every knob is the
-one you would also set on a 1000-executor cluster:
+Locally the session runs ``local[N]`` with N = ``$SPARK_GRAFT_CPUS``, or the
+host's core count when that is unset, and every knob is the one you would
+also set on a 1000-executor cluster:
 
 - AQE on (runtime re-plan: coalesce shuffle partitions, skew-join split).
 - Arrow on (vectorized pandas UDF / toPandas transfers).
@@ -183,10 +184,10 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else os.cpu_count()
 
     b = (
         SparkSession.builder.appName(app_name)

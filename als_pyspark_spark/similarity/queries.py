@@ -578,8 +578,8 @@ def _ivf_plan(spark: SparkSession, sf_dir: str):
 _PQ_M = 8  # product-quantizer subspaces (64 dims → 8 × 8-dim)
 _PQ_KSUB = 256  # centroids per subspace → 1 byte/code, 8 bytes/vector
 _PQ_ITERS = 6
-# ADC shortlist size refined by exact re-rank. 1024, from the round-11
-# sweep (scripts/sweep_ivfpq.py, PERF.md): on this isotropic corpus the
+# ADC shortlist size refined by exact re-rank. 1024, from the IVF-PQ
+# recall sweep (PERF.md, "IVF-PQ recall sweep"): on this isotropic corpus the
 # shortlist — not the probe count — was the binding recall constraint at
 # sf1 (sim recall@10 0.82→0.92 at L=256→1024; real witness 0.66→0.76 at
 # sf1 / 0.86 at sf0.1, runtime unchanged), and the refine stage's cost is

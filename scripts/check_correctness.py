@@ -4,16 +4,13 @@ names, and order-insensitive values.
 
 Usage: python scripts/check_correctness.py [--bare] [sf_dir] [query ...]
 
-``--bare`` builds a BARE SparkSession (``SparkSession.builder.master(...)``
-with no factory conf at all) instead of ``build_session`` — the shape of
-the EXTERNAL driver's session. Round 8 shipped a regression this mirror
-was structurally blind to: ``min_label_components`` required the
-checkpoint dir that only ``build_session`` wires, so both CC queries were
-locally green and driver-red. Every query must be self-sufficient on a
-bare session (per-query UTC pin, lazy checkpoint dir, per-query recursion
-limit); this flag is how that property is gated locally. The end-of-round
-ritual runs the verification window once with ``--bare`` in addition to
-the 3x factory-session passes.
+``--bare`` builds a BARE SparkSession (``SparkSession.builder.master(
+"local[*]")`` with no factory conf at all) instead of ``build_session`` —
+the shape of an external caller's session. Every query must be
+self-sufficient on a bare session (per-query UTC pin, lazy checkpoint dir,
+per-query recursion limit); this flag is how that property is gated
+locally. For example, a query that relied on the checkpoint dir only
+``build_session`` wires would pass the factory-session gate and fail here.
 """
 
 from __future__ import annotations
@@ -42,9 +39,8 @@ def main() -> int:
     if bare:
         from pyspark.sql import SparkSession
 
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         spark = (
-            SparkSession.builder.master(f"local[{cpus}]")
+            SparkSession.builder.master("local[*]")
             .appName("check-correctness-bare")
             .getOrCreate()
         )

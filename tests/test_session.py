@@ -121,15 +121,15 @@ def test_sweep_ignores_plain_files_and_missing_base(tmp_path):
 
 
 def test_bare_session_gate_on_checkpoint_dependent_queries():
-    """Round-9 gate for the round-8 regression CLASS: every query must be
-    self-sufficient on a BARE SparkSession (the external driver builds its
-    own — no build_session conf exists there). A bare builder inside this
-    pytest process would just return the factory session, so the gate runs
-    in a SUBPROCESS via ``check_correctness.py --bare`` over the two
-    queries that exercise the one correctness-critical session dependency
-    (Dataset.checkpoint needs a checkpoint dir; UTC and the CTE recursion
-    limit are already pinned per-query). The end-of-round ritual widens
-    this to the full verification window."""
+    """Every query must be self-sufficient on a BARE SparkSession (an
+    external caller builds its own — no build_session conf exists there).
+    A bare builder inside this pytest process would just return the
+    factory session, so the gate runs in a SUBPROCESS via
+    ``check_correctness.py --bare`` over the two queries that exercise the
+    one correctness-critical session dependency (Dataset.checkpoint needs
+    a checkpoint dir; UTC and the CTE recursion limit are already pinned
+    per-query). ``check_correctness.py --bare`` with no query names runs
+    the same check over the whole registry."""
     import subprocess
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -149,6 +149,34 @@ def test_bare_session_gate_on_checkpoint_dependent_queries():
     )
     assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
     assert "0 failures" in proc.stdout
+
+
+def test_session_defaults_to_host_cores():
+    """With ``SPARK_GRAFT_CPUS`` unset, the factory session runs one task
+    slot per host core. Checked in a subprocess: this process already
+    holds the pytest session, which ``build_session`` would reuse."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    code = (
+        "from als_pyspark_spark.session import build_session\n"
+        "spark = build_session('default-cores')\n"
+        "print('parallelism', spark.sparkContext.defaultParallelism)\n"
+        "spark.stop()\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=repo,
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert f"parallelism {os.cpu_count()}" in proc.stdout, proc.stdout
 
 
 def test_session_has_checkpoint_dir_and_cleaner(spark):
