@@ -33,8 +33,10 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--rank", type=int, default=10)
     ap.add_argument("--max-iter", type=int, default=5)
     ap.add_argument("--reg-param", type=float, default=0.01)
-    ap.add_argument("--num-user-blocks", type=int, default=10)
-    ap.add_argument("--num-item-blocks", type=int, default=10)
+    ap.add_argument("--num-user-blocks", type=int, default=None,
+                    help="default: one block per task slot")
+    ap.add_argument("--num-item-blocks", type=int, default=None,
+                    help="default: one block per task slot")
     ap.add_argument("--implicit", action="store_true")
     ap.add_argument("--alpha", type=float, default=1.0)
     ap.add_argument("--nonnegative", action="store_true")

@@ -8,7 +8,7 @@ Parameter parity map (reference ALS.py:24-37 → pyspark.ml ALS):
 | rank=10                          | rank                     | |
 | max_iter=10                      | maxIter                  | |
 | reg_param=0.1                    | regParam                 | same ALS-WR λ·n scaling (ALS.py:500,523) |
-| num_user_blocks/num_item_blocks  | numUserBlocks/numItemBlocks | grid blocking (ALS.py:193-266) is internal to MLlib |
+| num_user_blocks/num_item_blocks=10 | numUserBlocks/numItemBlocks | default one block per task slot (MLlib RDD ``blocks=-1`` idea); grid blocking (ALS.py:193-266) is internal to MLlib |
 | implicit_prefs                   | implicitPrefs            | WORKS here; reference's is dead on arrival (broken compute_y_t_y, ALS.py:562-578) |
 | alpha                            | alpha                    | confidence c=1+α·r (ALS.py:511-515) |
 | nonnegative                      | nonnegative              | WORKS here; reference returns a malformed scipy tuple (Solver.py:99-101) |
@@ -41,8 +41,9 @@ class ALSParams:
     rank: int = 10
     max_iter: int = 10
     reg_param: float = 0.1
-    num_user_blocks: int = 10
-    num_item_blocks: int = 10
+    # None: one block per task slot (the session's defaultParallelism)
+    num_user_blocks: int | None = None
+    num_item_blocks: int | None = None
     implicit_prefs: bool = False
     alpha: float = 1.0
     nonnegative: bool = False
@@ -62,14 +63,18 @@ class ALSEngine:
         self.params = params or ALSParams()
         self.model: ALSModel | None = None
 
-    def train(self, ratings: DataFrame) -> "ALSEngine":
+    def _estimator(self, ratings: DataFrame) -> ALS:
+        """The unfitted estimator. An unset block count becomes one block
+        per task slot, read from the context: reading the input's partition
+        count instead would run its shuffles as an extra job under AQE."""
         p = self.params
-        als = ALS(
+        slots = ratings.sparkSession.sparkContext.defaultParallelism
+        return ALS(
             rank=p.rank,
             maxIter=p.max_iter,
             regParam=p.reg_param,
-            numUserBlocks=p.num_user_blocks,
-            numItemBlocks=p.num_item_blocks,
+            numUserBlocks=slots if p.num_user_blocks is None else p.num_user_blocks,
+            numItemBlocks=slots if p.num_item_blocks is None else p.num_item_blocks,
             implicitPrefs=p.implicit_prefs,
             alpha=p.alpha,
             nonnegative=p.nonnegative,
@@ -80,7 +85,9 @@ class ALSEngine:
             ratingCol=p.rating_col,
             coldStartStrategy="drop",
         )
-        self.model = als.fit(ratings)
+
+    def train(self, ratings: DataFrame) -> "ALSEngine":
+        self.model = self._estimator(ratings).fit(ratings)
         return self
 
     # -- factor tables: what NewALS.train returns (reference ALS.py:191) ----
@@ -144,8 +151,8 @@ class ALSEngine:
 def train(
     ratings: DataFrame,
     rank: int = 10,
-    num_user_blocks: int = 10,
-    num_item_blocks: int = 10,
+    num_user_blocks: int | None = None,
+    num_item_blocks: int | None = None,
     max_iter: int = 10,
     reg_param: float = 0.1,
     implicit_prefs: bool = False,
@@ -160,6 +167,10 @@ def train(
     ALS.py:24-37): same parameter names and defaults, same return shape —
     ``(user_id_and_factors, item_id_and_factors)`` (reference ALS.py:191),
     here as DataFrames ``(id, features ARRAY<FLOAT>)``.
+
+    The block counts are the exception: they default to one block per task
+    slot, not 10, since at small scales each extra block is one more
+    fixed-cost task in every stage. An explicit count is used as given.
 
     Differences are exactly the reference's defects, fixed:
     - ``seed`` is honored (the reference overwrites it with time(), D4);
@@ -188,23 +199,10 @@ def train(
             seed=seed,
         )
     )
-    als = ALS(
-        rank=rank,
-        maxIter=max_iter,
-        regParam=reg_param,
-        numUserBlocks=num_user_blocks,
-        numItemBlocks=num_item_blocks,
-        implicitPrefs=implicit_prefs,
-        alpha=alpha,
-        nonnegative=nonnegative,
-        checkpointInterval=check_point_interval,
-        seed=seed,
-        userCol="user",
-        itemCol="item",
-        ratingCol="rating",
-        coldStartStrategy="drop",
-        intermediateStorageLevel=intermediate_rdd_storage_level,
-        finalStorageLevel=final_rdd_storage_level,
+    als = (
+        eng._estimator(ratings)
+        .setIntermediateStorageLevel(intermediate_rdd_storage_level)
+        .setFinalStorageLevel(final_rdd_storage_level)
     )
     eng.model = als.fit(ratings)
     return eng.user_factors, eng.item_factors

@@ -60,6 +60,18 @@ def test_seed_reproducibility(rated):
     assert m1 == pytest.approx(m2, rel=1e-9)
 
 
+def test_block_grid_defaults_to_task_slots(engine, rated):
+    # unset block counts give one block per task slot; explicit ones are
+    # used as given
+    slots = rated.sparkSession.sparkContext.defaultParallelism
+    assert engine.user_factors.rdd.getNumPartitions() == slots
+    assert engine.item_factors.rdd.getNumPartitions() == slots
+    p = ALSParams(rank=5, max_iter=1, seed=7, num_user_blocks=3, num_item_blocks=4)
+    eng = ALSEngine(p).train(rated)
+    assert eng.user_factors.rdd.getNumPartitions() == 3
+    assert eng.item_factors.rdd.getNumPartitions() == 4
+
+
 def test_block_count_invariance(rated):
     # re-blocking must not change model quality materially (the whole point
     # of the reference's partition_ratings grid, ALS.py:193-266)

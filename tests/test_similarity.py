@@ -271,3 +271,27 @@ def test_pca_projection_witness_and_planted_direction(spark, tmp_path):
     assert [(r.pc1, r.pc2, r.pc3, r.pc4) for r in rows] == [
         (r.pc1, r.pc2, r.pc3, r.pc4) for r in rows2
     ]
+
+
+def test_pq_encode_skips_zero_row_batch():
+    """An empty Arrow batch (an empty partition of the corpus) yields no
+    output batch and no error from the IVF-PQ encode pass."""
+    import numpy as np
+    import pyarrow as pa
+
+    from als_pyspark_spark.similarity.queries import _pq_encode_batches
+
+    dim, m_sub, ksub = 4, 2, 3
+    rng = np.random.default_rng(0)
+    encode = _pq_encode_batches(
+        rng.normal(size=(2, dim)),
+        rng.normal(size=(m_sub, ksub, dim // m_sub)),
+        rng.normal(size=(1, dim)),
+        np.array([0]),
+        10,
+    )
+    empty = pa.RecordBatch.from_arrays(
+        [pa.array([], pa.int64()), pa.array([], pa.list_(pa.float32()))],
+        ["vec_id", "embedding"],
+    )
+    assert list(encode(iter([empty]))) == []

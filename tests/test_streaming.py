@@ -423,3 +423,19 @@ def test_dedup_exactly_once_at_watermark_boundary_probe(spark, tmp_path):
         got = run_to_memory(op(src()), name, mode="append").collect()
         emitted = sorted(r.event_id for r in got)
         assert emitted == [1, 2, 9], (name, got)
+
+
+def test_source_bytes_reads_file_uris(tmp_path):
+    """A ``file:`` URI measures the same bytes as its plain path, whatever
+    its form; ``file://localhost/x`` once measured 0 and sized state
+    partitions to 1."""
+    from als_pyspark_spark.streaming.events import source_bytes
+
+    f = tmp_path / "part-0.parquet"
+    f.write_bytes(b"x" * 1234)
+    path = str(f)
+    sizes = [
+        source_bytes(p)
+        for p in (path, f"file:{path}", f"file://{path}", f"file://localhost{path}")
+    ]
+    assert sizes == [1234] * 4
